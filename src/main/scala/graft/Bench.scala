@@ -6,9 +6,21 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_SF_DIR and prints one JSON line for the driver.
   */
 object Bench {
+  /** The core count the bench history is recorded at (the default). */
+  val CanonicalCpus = 32
+
+  /** Where a full run at `cpus` cores keeps its round JSON: the round file
+    * at the canonical count, a core-suffixed sibling otherwise (named like
+    * the `BENCH_rNN_cK.json` scaling records). A run at another core count is a
+    * different measurement, so it can neither create nor replace the
+    * round's result. */
+  def roundFile(round: Int, cpus: Int): String =
+    if (cpus == CanonicalCpus) f"bench_out_r$round%02d.json"
+    else f"bench_out_r$round%02d_c$cpus.json"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", CanonicalCpus.toString)
     val spark = GraftSession.builder("graft-bench", Some(s"local[$cpus]"))
       .config("spark.sql.shuffle.partitions", cpus)
       .getOrCreate()
@@ -610,7 +622,7 @@ object Bench {
     // filtered dev runs (SPARK_GRAFT_BENCH_ONLY) are not comparable
     // round signals — never let one overwrite the round file
     if (!sys.env.contains("SPARK_GRAFT_BENCH_ONLY")) try {
-      val roundFile = f"bench_out_r$round%02d.json"
+      val roundFile = Bench.roundFile(round, cpus.toInt)
       // The round snapshot prefers the BEST UNTAINTED run (round-17
       // judge task): rank (tainted, total) lexicographically — an
       // untainted run always beats a tainted one; within a taint class
@@ -647,24 +659,28 @@ object Bench {
       // run writes through this same code path (round-20 found an 8-core
       // 46.7 s run squatting on the round file, outranking every honest
       // 32-core run — at sf0.1 fewer cores read FASTER, so the keep-best
-      // rank inverted). A run at a different SPARK_GRAFT_CPUS is a
-      // different measurement, never a better one.
+      // rank inverted). [[roundFile]] keeps such runs out of the round
+      // file; a canonical run replaces one that was seeded there earlier.
       def cpusOf(j: String): Int =
         "\"calib_mt_threads\":(\\d+)".r.findFirstMatchIn(j)
           .map(_.group(1).toInt).getOrElse(-1)
       val path = java.nio.file.Paths.get(roundFile)
       val keepExisting = java.nio.file.Files.exists(path) && {
         val prev = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
-        val comparable = queryKeys(prev) == queryKeys(json) &&
-          cpusOf(prev) == cpusOf(json)
-        val better = comparable &&
+        val sameSet = queryKeys(prev) == queryKeys(json)
+        val sameCores = cpusOf(prev) == cpusOf(json)
+        val better = sameSet && sameCores &&
           Ordering.Tuple2[Int, Double].lt(rank(prev), rank(json))
         if (better) System.err.println(
           s"[bench] round file $roundFile keeps its better run " +
             s"(rank ${rank(prev)} beats ${rank(json)})")
-        else if (!comparable && java.nio.file.Files.size(path) > 0)
-          System.err.println(
+        else if (java.nio.file.Files.size(path) > 0) {
+          if (!sameCores) System.err.println(
+            s"[bench] round file $roundFile replaced: it held a run at " +
+              s"${cpusOf(prev)} cores, this run used ${cpusOf(json)}")
+          if (!sameSet) System.err.println(
             s"[bench] round file $roundFile replaced: headline set changed")
+        }
         better
       }
       if (!keepExisting)

@@ -43,6 +43,10 @@ object GraftExtensions {
     // same Scala APIs; non-path identifiers fall through untouched
     ext.injectResolutionRule(session => graft.sql.GraftPathRules(session))
 
+    // a filter on a Delta table's partition columns narrows its log-backed
+    // file index, so plan statistics and inputFiles count only those files
+    ext.injectOptimizerRule(_ => graft.delta.PruneLogFileIndex)
+
     // table_changes('<path>', from[, to]) — the CDF as a TABLE FUNCTION
     // (delta-spark's SQL surface for the change feed): versions as
     // integers, timestamps as strings; `to` omitted = latest. Resolves

@@ -2068,12 +2068,19 @@ final class DeltaTable(spark: SparkSession, val path: String) {
       else if (parts.nonEmpty) aligned.repartition(parts.map(col): _*)
       else aligned
     val physParts = physicalPartNames(parts)
-    val writer = toPhysicalForWrite(arranged, evolvedSchema).write.mode("overwrite")
-      .option("compression", tableCodec)
-    (if (physParts.nonEmpty) writer.partitionBy(physParts: _*) else writer)
-      .parquet(staging.toString)
-
-    val adds = collectStagedFiles(staging, physParts)
+    // A plan that holds no rows by construction (`limit(0)`, an empty local
+    // relation) writes no Parquet and lists no staging directory; the
+    // commit still carries its txn, commitInfo and any metaData. The
+    // analyzed plan answers this at no cost (analysis is already done).
+    val adds =
+      if (df.queryExecution.analyzed.maxRows.contains(0L)) Nil
+      else {
+        val writer = toPhysicalForWrite(arranged, evolvedSchema).write.mode("overwrite")
+          .option("compression", tableCodec)
+        (if (physParts.nonEmpty) writer.partitionBy(physParts: _*) else writer)
+          .parquet(staging.toString)
+        collectStagedFiles(staging, physParts)
+      }
     try {
       // identity high-water-mark advance: assigned blocks move it to the
       // last allocated value (batch row count from the staged stats);
@@ -4555,10 +4562,10 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     * and protocol replay into the clone, under a fresh table id.
     *
     * Partitioned sources clone too (round 13): the clone's reads resolve
-    * partition columns from `add.partitionValues` via a broadcast
-    * per-file probe ([[FileStringValue]]) instead of directory discovery
-    * — absolute foreign paths share no basePath, but the log is the
-    * protocol's authoritative source of partition values anyway.
+    * partition columns from `add.partitionValues` through the
+    * [[LogFileIndex]], like every read — absolute foreign paths share no
+    * directory with the clone, but the log is the protocol's
+    * authoritative source of partition values anyway.
     *
     * Caveat, same as Delta proper: a later VACUUM of the SOURCE can
     * collect files the clone still references (clones don't pin source
@@ -5073,10 +5080,8 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     require(dvd.isEmpty || dvSnap.isDefined,
       "streaming batches must not carry deletion vectors")
     val phys = physicalSchema(sch)
-    val paths = files.map(f => new Path(path, f.path).toString)
     ensureFieldIdRead()
-    val raw0 = StreamBridge.streamingParquet(spark, paths, phys,
-      if (partitionColumns.isEmpty) None else Some(path))
+    val raw0 = logScan(files, phys, physicalPartNames(partitionColumns), isStreaming = true)
     // DV subtraction BEFORE the logical rename (the hidden _metadata
     // column only resolves directly over the file-source relation) —
     // identical membership filter to [[rawFor]], no join, no driver list
@@ -5111,7 +5116,6 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     DeltaLog.requireReadSupported(snap.protocol)
     val sch = snap.schema.getOrElse(
       throw new IllegalStateException(s"no table metadata at $path"))
-    val paths = snap.files.map(f => new Path(path, f.path).toString)
     val parts = snap.metadata.map(_.partitionColumns).getOrElse(Nil)
     // column mapping: parquet files store PHYSICAL names — read with the
     // physical schema and rename back to logical below (one projection)
@@ -5127,56 +5131,24 @@ final class DeltaTable(spark: SparkSession, val path: String) {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField(DeltaTable.MaterializedRcvCol,
           org.apache.spark.sql.types.LongType)))
-    // the declared schema is passed EXPLICITLY on both branches: files
-    // written before a schema evolution lack the new columns, and an
-    // inferred schema would make the select below fail instead of
-    // null-filling them (partition columns resolve from the dir layout —
-    // except for shallow clones of partitioned sources, below)
+    // the declared schema is passed EXPLICITLY: files written before a
+    // schema evolution lack the new columns, and an inferred schema would
+    // make the select below fail instead of null-filling them
     ensureFieldIdRead()
     val del = dvLookup(snap)
-    // SHALLOW CLONES of partitioned sources reference files by ABSOLUTE
-    // path, so Spark's directory discovery (which needs one shared
-    // basePath) cannot resolve partition columns. The log can:
-    // `add.partitionValues` is the Delta protocol's authoritative
-    // representation — attach each partition column as a broadcast
-    // fileKey→value probe inside the scan stage (FileStringValue, the
-    // same shape as the DV/row-id lookups), cast to its declared type.
-    val foreignPartitioned =
-      parts.nonEmpty && snap.files.exists(f => new Path(f.path).isAbsolute)
     val needMeta = withMeta || withRowIds || del.isDefined
+    // partition columns resolve from `add.partitionValues` (the log's
+    // authoritative copy), which also covers SHALLOW CLONES whose files sit
+    // under another table's directories. Per-file key = URI path suffix
+    // incl. partition dirs (see [[fileKey]] — a bare basename collides
+    // across partition directories). `_metadata` is projected BEFORE the
+    // logical rename (hidden metadata columns do not survive projections).
     val physByLogical = sch.fields.zip(phys.fields).map {
       case (l, p) => l.name -> p.name }.toMap
-    // per-file key = URI path suffix incl. partition dirs (see
-    // [[fileKey]] — a bare basename collides across partition
-    // directories). `_metadata` is projected BEFORE the logical rename
-    // (hidden metadata columns do not survive projections).
-    val withPhysCols =
-      if (!foreignPartitioned) {
-        val reader = spark.read.schema(readSchema)
-        val df =
-          if (parts.isEmpty) reader.parquet(paths: _*)
-          else reader.option("basePath", path).parquet(paths: _*)
-        if (!needMeta) df else df
-          .withColumn("__meta_fname", fileKeyExpr(snap))
-          .withColumn("__meta_pos", col("_metadata.row_index"))
-      } else {
-        import org.apache.spark.sql.graft.ColumnBridge
-        val partPhysSet = parts.map(physByLogical).toSet
-        val dataSchema = StructType(readSchema.fields.filterNot(f => partPhysSet(f.name)))
-        val keyed = spark.read.schema(dataSchema).parquet(paths: _*)
-          .withColumn("__meta_fname", fileKeyExpr(snap))
-          .withColumn("__meta_pos", col("_metadata.row_index"))
-        val attached = parts.foldLeft(keyed) { (d, lp) =>
-          val pn = physByLogical(lp)
-          val bc = spark.sparkContext.broadcast(new FileStringLookup(
-            snap.files.map(f => fileKey(snap, f) ->
-              f.partitionValues.getOrElse(pn, null)).toMap))
-          d.withColumn(pn, ColumnBridge.wrap(FileStringValue(
-            ColumnBridge.toExpr(col("__meta_fname")), bc))
-            .cast(sch.fields.find(_.name == lp).get.dataType))
-        }
-        if (needMeta) attached else attached.drop("__meta_fname", "__meta_pos")
-      }
+    val scanned = logScan(snap.files, readSchema, parts.map(physByLogical))
+    val withPhysCols = if (!needMeta) scanned else scanned
+      .withColumn("__meta_fname", fileKeyExpr(snap))
+      .withColumn("__meta_pos", col("_metadata.row_index"))
     val withCols =
       if (phys.fieldNames.sameElements(sch.fieldNames)) withPhysCols
       else withPhysCols.select(
@@ -5219,6 +5191,18 @@ final class DeltaTable(spark: SparkSession, val path: String) {
     }
     if (withMeta || !needMeta) withIds
     else withIds.drop("__meta_fname", "__meta_pos")
+  }
+
+  /** A Parquet scan of `files` through a [[LogFileIndex]]: sizes, times
+    * and partition values come from the log, so nothing is listed.
+    * `readSchema` holds PHYSICAL names, `physParts` the partition columns
+    * among them (they come after the data columns in the output). */
+  private def logScan(files: Seq[AddFile], readSchema: StructType,
+                      physParts: Seq[String], isStreaming: Boolean = false): DataFrame = {
+    val index = new LogFileIndex(fs.makeQualified(new Path(path)), files,
+      StructType(physParts.map(readSchema(_))), spark.conf.get("spark.sql.session.timeZone"))
+    org.apache.spark.sql.graft.StreamBridge.parquetOver(spark, index,
+      StructType(readSchema.fields.filterNot(f => physParts.contains(f.name))), isStreaming)
   }
 
   /** Broadcast file-key → serialized-bitmap lookup for every live file

@@ -53,51 +53,3 @@ case class FileLongValue(child: Expression, lookup: Broadcast[FileLongLookup],
     copy(child = newChild)
 }
 
-/** Broadcast file-key → string lookup: the partition-value attach for
-  * SHALLOW CLONES of partitioned sources. A clone's adds reference the
-  * source's files by ABSOLUTE path, so Spark's directory-based partition
-  * discovery (which needs a shared basePath) cannot run — instead the
-  * values come from `add.partitionValues`, the representation the Delta
-  * protocol calls authoritative anyway, probed per row inside the scan
-  * stage exactly like [[FileLongLookup]]. Values may be null
-  * (`__HIVE_DEFAULT_PARTITION__` directories log a null value). */
-final class FileStringLookup(entries: Map[String, String]) extends Serializable {
-  @transient private lazy val m: java.util.HashMap[UTF8String, UTF8String] = {
-    val h = new java.util.HashMap[UTF8String, UTF8String](entries.size * 2)
-    entries.foreach { case (k, v) =>
-      h.put(UTF8String.fromString(k),
-        if (v == null) null else UTF8String.fromString(v))
-    }
-    h
-  }
-  def get(k: UTF8String): UTF8String = m.get(k)
-}
-
-/** [[FileStringLookup]] as a Catalyst expression: NULL for absent keys
-  * AND for present-but-null values (both read back as SQL NULL, which is
-  * what a null partition value means). */
-case class FileStringValue(child: Expression, lookup: Broadcast[FileStringLookup])
-    extends UnaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "file_partition_value"
-
-  override protected def nullSafeEval(k: Any): Any =
-    lookup.value.get(k.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("fileStringLookup", lookup,
-      classOf[Broadcast[FileStringLookup]].getName)
-    nullSafeCodeGen(ctx, ev, k => {
-      val tmp = ctx.freshName("pv")
-      s"""org.apache.spark.unsafe.types.UTF8String $tmp =
-         |  ((graft.delta.FileStringLookup)$ref.value()).get($k);
-         |if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp; }
-         |""".stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): FileStringValue =
-    copy(child = newChild)
-}

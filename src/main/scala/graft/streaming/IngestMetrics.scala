@@ -70,29 +70,44 @@ object IngestMetrics {
   val BufferLagMax = "buffer.lag.max"
   val BufferLagMin = "buffer.lag.min"
 
-  /** Emit per-batch counters from the Observation row collected during the
-    * Delta write (keys: messages, deser_failed, transform_failed, bytes). */
-  def emitBatch(sink: MetricsSink, observed: Map[String, Any],
-                writeMillis: Long, failed: Boolean): Unit = {
-    def n(key: String): Long = observed.get(key) match {
-      case Some(v: Long) => v
-      case Some(v: Number) => v.longValue()
-      case _ => 0L
-    }
-    val messages = n("messages")
-    val deserFailed = n("deser_failed")
-    val transformFailed = n("transform_failed")
-    sink.counter(MessageDeserialized, messages - deserFailed)
-    sink.counter(MessageDeserializationFailed, deserFailed)
-    sink.counter(MessageTransformed, messages - deserFailed - transformFailed)
-    sink.counter(MessageTransformFailed, transformFailed)
-    sink.gauge(MessageSize, if (messages > 0) n("bytes") / math.max(messages, 1) else 0L)
+  /** Before the batch's Delta write: the record batch and its write start. */
+  def batchStarted(sink: MetricsSink): Unit = {
     sink.counter(RecordBatchStarted)
+    sink.counter(DeltaWriteStarted)
+  }
+
+  /** After the write returned (committed or an idempotent skip). `observed`
+    * is the Observation row collected during the write (keys: messages,
+    * deser_failed, transform_failed, bytes); None when no write job ran or
+    * its row did not arrive, and then no message counters are sent. */
+  def batchCompleted(sink: MetricsSink, observed: Option[Map[String, Any]],
+                     writeMillis: Long): Unit = {
+    observed.foreach { o =>
+      val messages = count(o, "messages")
+      val deserFailed = count(o, "deser_failed")
+      val transformFailed = count(o, "transform_failed")
+      sink.counter(MessageDeserialized, messages - deserFailed)
+      sink.counter(MessageDeserializationFailed, deserFailed)
+      sink.counter(MessageTransformed, messages - deserFailed - transformFailed)
+      sink.counter(MessageTransformFailed, transformFailed)
+      sink.gauge(MessageSize, if (messages > 0) count(o, "bytes") / messages else 0L)
+    }
     sink.counter(RecordBatchCompleted)
     sink.timer(RecordBatchWriteDuration, writeMillis)
-    sink.counter(DeltaWriteStarted)
-    if (failed) sink.counter(DeltaWriteFailed) else sink.counter(DeltaWriteCompleted)
+    sink.counter(DeltaWriteCompleted)
     sink.timer(DeltaWriteDuration, writeMillis)
+  }
+
+  /** The write threw: only the failure is counted. */
+  def batchFailed(sink: MetricsSink, writeMillis: Long): Unit = {
+    sink.counter(DeltaWriteFailed)
+    sink.timer(DeltaWriteDuration, writeMillis)
+  }
+
+  /** One observed aggregate as a Long (0 when absent). */
+  def count(observed: Map[String, Any], key: String): Long = observed.get(key) match {
+    case Some(v: Number) => v.longValue()
+    case _ => 0L
   }
 }
 

@@ -1,7 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Base64
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -162,13 +167,19 @@ object PipelineStages {
       .select(col("msg.*"))
     val dead = staged.filter(col("decode_failed") || size(col("errs")) > 0)
       .select(
-        when(col("decode_failed"), base64(col("value").cast(BinaryType))).as("base64_bytes"),
+        when(col("decode_failed"), plainBase64(col("value").cast(BinaryType))).as("base64_bytes"),
         when(!col("decode_failed"), col("_json")).as("json_string"),
         when(col("decode_failed"), lit("deserialization failed"))
           .otherwise(concat_ws("; ", col("errs"))).as("error"),
         current_timestamp().as("timestamp"))
     (okRows, dead)
   }
+
+  /** RFC 4648 base64 on one line, as the reference writes it: `base64()`
+    * follows `spark.sql.chunkBase64String.enabled` and may break the text
+    * into 76-character MIME lines. */
+  private def plainBase64(bytes: Column): Column =
+    ColumnBridge.wrap(Base64(ColumnBridge.toExpr(bytes), chunkBase64 = false))
 }
 
 /** End-to-end ingestion: a Kafka-shaped source (streaming or batch) through
@@ -231,32 +242,50 @@ object IngestPipeline {
   def processBatch(batch: DataFrame, batchId: Long, table: DeltaTable,
                    dlq: DeadLetterSink, opts: IngestOptions): Unit = {
     val schema = table.schema // current snapshot's schema, not start-time's
-    val staged0 = PipelineStages(batch, schema, opts)
-    // M1 counters ride the write job as observed aggregates (zero extra
-    // jobs): the observation node sits above the staged frame, BEFORE the
-    // ok/dead split filters, so it sees every message once.
-    val obs = org.apache.spark.sql.Observation()
-    val staged = if (opts.metricsSink.isDefined)
-      staged0.observe(obs,
-        count(lit(1)).as("messages"),
-        count(when(col("decode_failed"), lit(1))).as("deser_failed"),
-        count(when(!col("decode_failed") && size(col("errs")) > 0, lit(1))).as("transform_failed"),
-        coalesce(sum(octet_length(col("value").cast(BinaryType))), lit(0L)).as("bytes"))
-    else staged0
+    // M1 counters and the dead-letter count ride the write job as observed
+    // aggregates (zero extra jobs): the observation node sits above the
+    // staged frame, BEFORE the ok/dead split filters, so it sees every
+    // message once.
+    val obs = Observation()
+    val staged = PipelineStages(batch, schema, opts).observe(obs,
+      count(lit(1)).as("messages"),
+      count(when(col("decode_failed"), lit(1))).as("deser_failed"),
+      count(when(!col("decode_failed") && size(col("errs")) > 0, lit(1))).as("transform_failed"),
+      coalesce(sum(octet_length(col("value").cast(BinaryType))), lit(0L)).as("bytes"))
     val (ok, dead) = PipelineStages.split(staged)
+    opts.metricsSink.foreach(IngestMetrics.batchStarted)
     val t0 = System.nanoTime()
+    def ms = (System.nanoTime() - t0) / 1000000L
     val committed =
       try table.append(ok, Some(opts.appId), batchId, operation = "STREAMING UPDATE")
-      catch { case e: Throwable => opts.metricsSink.foreach(
-        _.counter(IngestMetrics.DeltaWriteFailed)); throw e }
-    val ms = (System.nanoTime() - t0) / 1000000L
-    // obs.get blocks until the write job fires it; safe only when the
-    // append actually committed (an idempotent skip may run no job)
-    if (committed >= 0)
-      opts.metricsSink.foreach(s => IngestMetrics.emitBatch(s, obs.get, ms, failed = false))
-    dlq.write(dead, batchId)
+      catch { case e: Throwable =>
+        opts.metricsSink.foreach(IngestMetrics.batchFailed(_, ms)); throw e }
+    val writeMs = ms
+    // An idempotent skip may run no job, and then the observation never
+    // fires; nobody waits for it when no sink reads it.
+    val observed =
+      if (committed < 0 || (opts.metricsSink.isEmpty && (dlq eq NoopDeadLetterSink))) None
+      else awaitObservation(obs)
+    opts.metricsSink.foreach(IngestMetrics.batchCompleted(_, observed, writeMs))
+    // A batch with no dead letters still commits the DLQ's txn (its
+    // watermark advances every batch), but over an empty plan: the append
+    // then writes no Parquet and runs no job, instead of re-running the
+    // whole message path to find zero rows. A replayed batch (the main
+    // append skipped) or a missing observation re-runs it.
+    val clean = observed.exists(o =>
+      IngestMetrics.count(o, "deser_failed") + IngestMetrics.count(o, "transform_failed") == 0)
+    dlq.write(if (clean) dead.limit(0) else dead, batchId)
     if (committed >= 0) opts.minBytesPerFile.foreach(table.compact(_): Unit)
   }
+
+  /** Longest wait for a committed write's observed row. The row arrives
+    * through the asynchronous listener bus, normally within milliseconds of
+    * the job's end; past this the batch proceeds without it. */
+  private val ObservationWait: FiniteDuration = 10.seconds
+
+  private def awaitObservation(obs: Observation): Option[Map[String, Any]] =
+    try { Await.ready(obs.future, ObservationWait); Some(obs.get) }
+    catch { case _: java.util.concurrent.TimeoutException => None }
 
   /** Flagship batch-mode run (SURVEY §7.3, the reference's canonical
     * web_requests example re-expressed): ingest sf events as JSON messages

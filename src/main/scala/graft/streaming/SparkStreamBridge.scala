@@ -16,7 +16,7 @@ object StreamBridge {
 
   /** A STREAMING-tagged parquet batch over an explicit file list with a
     * declared schema (partition columns resolve from the Hive layout
-    * when `basePath` is set — the same read shape as the batch path). */
+    * when `basePath` is set) — the change-feed stream's read shape. */
   def streamingParquet(spark: SparkSession, paths: Seq[String],
                        schema: StructType, basePath: Option[String]): DataFrame = {
     val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
@@ -27,6 +27,20 @@ object StreamBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(cs,
       org.apache.spark.sql.execution.datasources.LogicalRelation(
         ds.resolveRelation(checkFilesExist = false), isStreaming = true))
+  }
+
+  /** A Parquet scan over a prepared file index (Delta's log-backed one):
+    * the relation Spark's own reader would build, minus the listing.
+    * Streaming-tagged when `isStreaming`, for a V1 source's `getBatch`. */
+  def parquetOver(spark: SparkSession,
+                  index: org.apache.spark.sql.execution.datasources.FileIndex,
+                  dataSchema: StructType, isStreaming: Boolean): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val rel = HadoopFsRelation(index, index.partitionSchema, dataSchema, bucketSpec = None,
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+      options = Map.empty)(cs)
+    org.apache.spark.sql.classic.Dataset.ofRows(cs, LogicalRelation(rel, isStreaming))
   }
 
   /** The BATCH twin of a micro-batch's streaming DataFrame — what a V1

@@ -1799,4 +1799,28 @@ class DeltaSpec extends SparkSpec {
       "bin routing must not embed a file-count-sized map literal in the plan")
     assert(routed.count() === 200L)
   }
+
+  test("reads plan from the log: no listing job past 32 files; partition filters prune inputFiles") {
+    val t = DeltaTable.forPath(spark, tmpDir("log-index")).create(StructType(Seq(
+      StructField("id", LongType), StructField("p", IntegerType))), Seq("p"))
+    val rows = (0L until 400L).map(i => (i, (i % 40).toInt))
+    t.append(rows.toDF("id", "p"))
+    val files = t.snapshot.files
+    assert(files.size > 32, "the table must exceed Spark's parallel-listing threshold")
+    var back = Array.empty[(Long, Int)]
+    val jobs = jobsDuring { back = t.toDF.as[(Long, Int)].collect() }
+    assert(back.sorted.toSeq === rows)
+    val listing = jobs.flatMap(j => Option(j.properties.getProperty("spark.job.description")))
+      .filter(_.startsWith("Listing leaf files"))
+    assert(listing.isEmpty, s"listing jobs: $listing")
+
+    val seven = t.toDF.filter(col("p") === 7)
+    val sevenFiles = files.filter(_.partitionValues.get("p").contains("7"))
+    assert(sevenFiles.nonEmpty)
+    assert(seven.inputFiles.length === sevenFiles.size)
+    assert(seven.inputFiles.forall(_.contains("/p=7/")))
+    assert(t.toDF.inputFiles.length === files.size)
+    assert(seven.select("id").as[Long].collect().sorted.toSeq ===
+      rows.filter(_._2 == 7).map(_._1))
+  }
 }

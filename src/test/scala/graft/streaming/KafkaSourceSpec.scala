@@ -136,4 +136,33 @@ class KafkaSourceSpec extends SparkSpec {
     assert(sink.counters("delta.write.failed") === 0L)
     assert(sink.timers.exists(_._1 == "delta.write.duration"))
   }
+
+  test("metrics: started before the write, completed after it, only failed on a throw") {
+    val schema = StructType(Seq(StructField("id", LongType)))
+    val table = DeltaTable.forPath(spark, tmpDir("metrics-order")).create(schema)
+    table.addCheckConstraint("positive_id", "id > 0")
+    val sink = new RecordingMetricsSink
+    val opts = IngestOptions(appId = "mo", metricsSink = Some(sink))
+    def batch(json: String) = Seq((1L, json)).toDF("offset", "value")
+      .select(col("value"), lit(0).as("partition"), col("offset"),
+        lit("t").as("topic"), lit(0L).as("timestamp"), lit(0).as("timestampType"))
+    // what the sink held when the commit landed
+    var atCommit = Map.empty[String, Long]
+    table.log.onPostCommit((_, _, _) => atCommit = sink.synchronized(sink.counters.toMap))
+    IngestPipeline.processBatch(batch("""{"id": 1}"""), 0L, table, NoopDeadLetterSink, opts)
+    assert(atCommit.getOrElse("recordbatch.started", 0L) === 1L)
+    assert(atCommit.getOrElse("delta.write.started", 0L) === 1L)
+    assert(atCommit.getOrElse("delta.write.completed", 0L) === 0L)
+    assert(sink.counters("delta.write.completed") === 1L)
+
+    sink.counters.clear()
+    intercept[Throwable](
+      IngestPipeline.processBatch(batch("""{"id": -1}"""), 1L, table, NoopDeadLetterSink, opts))
+    assert(sink.counters("recordbatch.started") === 1L)
+    assert(sink.counters("delta.write.started") === 1L)
+    assert(sink.counters("delta.write.failed") === 1L)
+    assert(sink.counters("delta.write.completed") === 0L)
+    assert(sink.counters("recordbatch.completed") === 0L)
+    assert(sink.counters("messages.deserialization.completed") === 0L)
+  }
 }

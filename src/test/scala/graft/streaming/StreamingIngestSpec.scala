@@ -132,4 +132,67 @@ class StreamingIngestSpec extends SparkSpec {
     assert(r.getAs[String]("date") === "2021-03-16")
     assert(r.getAs[Long]("_kafka_offset") === 7L)
   }
+
+  test("a clean batch commits the DLQ txn with no DLQ job and no DLQ file") {
+    val clean = kafkaShape(Seq(
+      (1L, """{"id": 1, "date": "a"}"""),
+      (2L, """{"id": 2, "date": "b"}""")).toDF("offset", "value"))
+    def run(sink: DeltaTable => DeadLetterSink): (Int, DeltaTable, DeltaTable) = {
+      val table = DeltaTable.forPath(spark, tmpDir("clean-table")).create(schema)
+      val dlq = DeltaTable.forPath(spark, tmpDir("clean-dlq"))
+        .create(PipelineStages.DeadLetterSchema)
+      val opts = IngestOptions(appId = "clean", dlqTablePath = Some(dlq.path))
+      val jobs = jobsDuring(IngestPipeline.processBatch(clean, 7L, table, sink(dlq), opts))
+      (jobs.size, table, dlq)
+    }
+    val (noopJobs, _, _) = run(_ => NoopDeadLetterSink)
+    val (dlqJobs, table, dlq) = run(new DeltaDeadLetterSink(_, "clean", Nil))
+    assert(dlqJobs === noopJobs, "the DLQ write of a clean batch ran Spark jobs")
+    assert(table.toDF.count() === 2L)
+    // the DLQ watermark still advances: one version with the txn, no add
+    assert(dlq.snapshot.txns.get("clean-dlq") === Some(7L))
+    val last = dlq.log.readVersion(dlq.log.latestVersion())
+    assert(last.flatMap(_.txn).map(_.version) === Seq(7L))
+    assert(last.flatMap(_.add).isEmpty)
+    assert(dlq.toDF.count() === 0L)
+  }
+
+  test("a batch replayed after its main commit dead-letters exactly once") {
+    val tsSchema = StructType(Seq(
+      StructField("id", LongType),
+      StructField("when", TimestampType)))
+    val table = DeltaTable.forPath(spark, tmpDir("replay-table")).create(tsSchema)
+    val dlq = DeltaTable.forPath(spark, tmpDir("replay-dlq")).create(PipelineStages.DeadLetterSchema)
+    val opts = IngestOptions(appId = "replay", dlqTablePath = Some(dlq.path))
+    val batch = kafkaShape(Seq(
+      (1L, """{"id": 1, "when": "2021-11-11T22:11:58Z"}"""),
+      (2L, """{"id": 2, "when": "not a timestamp"}"""),
+      (3L, """this is not json at all""")
+    ).toDF("offset", "value"))
+    // batch 4's main commit landed, then the process died before its DLQ
+    // commit: the replay's main append is an idempotent skip
+    IngestPipeline.processBatch(batch, 4L, table, NoopDeadLetterSink, opts)
+    val sink = new DeltaDeadLetterSink(dlq, opts.appId, Nil)
+    IngestPipeline.processBatch(batch, 4L, table, sink, opts)
+    assert(dlq.toDF.count() === 2L)
+    assert(dlq.snapshot.txns.get("replay-dlq") === Some(4L))
+    IngestPipeline.processBatch(batch, 4L, table, sink, opts)
+    assert(dlq.toDF.count() === 2L)
+    assert(table.toDF.select("id").as[Long].collect().toSeq === Seq(1L))
+  }
+
+  test("undecodable payloads dead-letter as one-line base64, byte-exact") {
+    val payload = Array.tabulate[Byte](200)(i => (i * 37 + 0x80).toByte)
+    val key = "spark.sql.chunkBase64String.enabled"
+    val before = spark.conf.getOption(key)
+    try Seq("true", "false").foreach { chunk =>
+      spark.conf.set(key, chunk)
+      val staged = PipelineStages(
+        kafkaShape(Seq((1L, payload)).toDF("offset", "value")), schema, IngestOptions())
+      val b64 = PipelineStages.split(staged)._2.select("base64_bytes").as[String].collect()
+      assert(b64.length === 1)
+      assert(!b64.head.exists(c => c == '\r' || c == '\n'), s"line breaks with $key=$chunk")
+      assert(java.util.Base64.getDecoder.decode(b64.head).sameElements(payload))
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
